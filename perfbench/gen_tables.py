@@ -2,11 +2,13 @@
 
 Writes the ten tables graft's queries read (`region nation customer
 supplier part orders lineitem events documents embeddings`), one parquet
-file each, with the schema and value distributions of the repository's
-TPC-H-like test tables: independent uniform columns, a 30-word text
-vocabulary with ~5% " dup" near-copies, and 64-dimensional unit
-embeddings around ten weak cluster centres. Row counts follow the scale
-factor (lineitem = 6,000,000 x scale).
+file each. Schemas and row counts are those of the repository's
+TPC-H-like test tables at the same scale (lineitem = 6,000,000 x scale).
+The value distributions are modelled on those tables, not copied from
+them: independent uniform columns, a 30-word text vocabulary with ~5%
+" dup" near-copies, and 64-dimensional unit embeddings around ten weak
+cluster centres. README.md lists the statistics compared and where they
+differ.
 """
 import os
 

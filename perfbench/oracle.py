@@ -1,30 +1,27 @@
 """Output checks against graft's DuckDB oracle statements.
 
-Both sides go through the same sort-and-hash compare as the repository's
-oracle gate: columns sorted by name, object cells as strings, timestamps
-at microsecond resolution, rows lexsorted on every column, then an md5 of
-pandas' row hashes. Oracle digests depend only on the statement and the
-generated tables, so they are cached with the tables.
+Both sides are canonicalised by the repository's oracle gate,
+`tools/check_oracle.py` (`canon`: nested cells rejected, columns sorted
+by name, timestamps at microsecond resolution, rows lexsorted on every
+column), then reduced to an md5 of pandas' row hashes. Oracle digests
+depend only on the statement and the generated tables, so they are
+cached with the tables.
 """
 import hashlib
 import json
 import os
+import sys
 
 import duckdb
 import pandas as pd
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                                "tools"))
+from check_oracle import TABLES, canon  # noqa: E402
 
 
-def digest(df: pd.DataFrame) -> str:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if str(df[c].dtype).startswith("datetime64"):
-            df[c] = df[c].astype("datetime64[us]")
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+def digest(df: pd.DataFrame, side: str) -> str:
+    df = canon(df, side)
     h = hashlib.md5(",".join(df.columns).encode())
     h.update(pd.util.hash_pandas_object(df, index=False).values.tobytes())
     return f"{len(df)}:{h.hexdigest()}"
@@ -47,7 +44,7 @@ class Oracle:
     def expected(self, sql: str) -> str:
         key = hashlib.sha256(sql.encode()).hexdigest()
         if key not in self.cache:
-            self.cache[key] = digest(self.con.sql(sql).df())
+            self.cache[key] = digest(self.con.sql(sql).df(), "oracle")
             tmp = self.cache_path + ".tmp"
             with open(tmp, "w") as f:
                 json.dump(self.cache, f)
@@ -56,4 +53,4 @@ class Oracle:
 
     def actual(self, out_dir: str) -> str:
         return digest(self.con.sql(
-            f"SELECT * FROM read_parquet('{out_dir}/*.parquet')").df())
+            f"SELECT * FROM read_parquet('{out_dir}/*.parquet')").df(), "spark")

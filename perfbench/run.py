@@ -33,8 +33,6 @@ WORKLOADS = ("hydro_feed", "curation_loops")
 # the same inputs and the structural counts repeat; --seed orders the ops.
 TABLE_SCALE = 0.01
 TABLE_SEED = 20240101
-HYDRO_SITES = 15000
-HYDRO_BATCHES = 4
 # fixed heap and young generation, so resident memory does not follow
 # the collector's adaptive sizing from run to run
 JVM_MEMORY = ["-Xms2g", "-Xmx2g", "-Xmn384m"]
@@ -234,7 +232,7 @@ def per_layer(doc):
         m[f"pipeline.{kind}_s"] = (tot(dur_s(o) for o in ops if o["name"] == kind), "s")
     hydro = doc["check"].get("hydro")
     m["pipeline.state_rows"] = (hydro["state_rows"] if hydro else 0, "count")
-    m["pipeline.write_amp"] = (write_amp(tr["op_extras"], ops) if hydro else 0.0, "ratio")
+    m["pipeline.write_amp"] = (write_amp(ops, jobs, stages) if hydro else 0.0, "ratio")
     m["jvm.gc_s"] = (tot(p["gc_s"] for p in passes), "s")
     m["jvm.heap_peak_mb"] = (doc["heap_peak_mb"], "MB")
     m.update(self_times(ops, jobs, stages, passes, n))
@@ -256,13 +254,18 @@ def task_skew(stages):
     return num / den if den else 1.0
 
 
-def write_amp(extras, ops):
-    """Bytes of state written by every load/upsert of a pass over the
-    bytes of the state the pass ends with, averaged over passes."""
-    by_id = {e["id"]: e.get("state_bytes") for e in extras}
+def write_amp(ops, jobs, stages):
+    """Bytes written by every load/upsert of a pass over the bytes the
+    last upsert wrote, averaged over passes. Each load or upsert writes
+    the whole state, so the last one's bytes are the final state's."""
+    op_of_job = {j["id"]: j["op"] for j in jobs}
+    written = {}
+    for s in stages:
+        op = op_of_job[s["job"]]
+        written[op] = written.get(op, 0) + s["out_bytes"]
     amps = []
     for p in sorted({o["pass"] for o in ops}):
-        sizes = [by_id[o["id"]] for o in ops
+        sizes = [written.get(o["id"], 0) for o in ops
                  if o["pass"] == p and o["name"] in ("load", "upsert")]
         if sizes and sizes[-1]:
             amps.append(sum(sizes) / sizes[-1])
@@ -369,8 +372,7 @@ def main():
               "-cp", f"{classes}{os.pathsep}{spark_jars()}/*", "perfbench.Main",
               "--workload", args.workload, "--seed", str(args.seed),
               "--seconds", str(args.seconds), "--trace", str(args.trace),
-              "--data", data_dir, "--work", run_dir, "--out", out,
-              "--hydro-sites", str(HYDRO_SITES), "--hydro-batches", str(HYDRO_BATCHES)])
+              "--data", data_dir, "--work", run_dir, "--out", out])
     launch = time.time()
     code = run_child(cmd, cwd=run_dir, env=dict(os.environ),
                      timeout=deadline - time.time(), out_path=os.path.join(run_dir, "jvm.log"))

@@ -27,7 +27,7 @@ import graft.pipeline.HydroPipeline
   * `--out`; `run.py` turns it into metrics.
   *
   * Usage: Main --workload W --seed N --seconds S --trace 0|1
-  *        --data DIR --work DIR --out FILE --hydro-sites N --hydro-batches N
+  *        --data DIR --work DIR --out FILE
   */
 object Main {
   val OpProp = "perfbench.op"
@@ -39,8 +39,7 @@ object Main {
     "q61_dedup_clusters", "q220_coreness", "q128_shard_export")
 
   final case class Conf(workload: String, seed: Long, seconds: Double, trace: Boolean,
-                        data: String, work: String, out: String,
-                        hydroSites: Int, hydroBatches: Int)
+                        data: String, work: String, out: String)
 
   private def parse(args: Array[String]): Conf = {
     val kv = args.grouped(2).collect { case Array(k, v) if k.startsWith("--") =>
@@ -48,8 +47,7 @@ object Main {
     def get(k: String): String =
       kv.getOrElse(k, throw new IllegalArgumentException(s"missing --$k"))
     Conf(get("workload"), get("seed").toLong, get("seconds").toDouble,
-      get("trace") == "1", get("data"), get("work"), get("out"),
-      get("hydro-sites").toInt, get("hydro-batches").toInt)
+      get("trace") == "1", get("data"), get("work"), get("out"))
   }
 
   // epoch milliseconds with sub-millisecond resolution
@@ -126,8 +124,6 @@ object Main {
     def ops(spark: SparkSession, pass: Int, keep: Boolean): Seq[Op]
     /** Called before each pass, outside the pass's timing. */
     def reset(): Unit = ()
-    /** Called after each op when tracing; returns extra per-op fields. */
-    def afterOp(op: Op): Map[String, Any] = Map.empty
     /** Output checks on what the cold pass kept. */
     def check(spark: SparkSession): Map[String, Any]
     def extraTrace(spark: SparkSession): Map[String, Any] = Map.empty
@@ -160,6 +156,9 @@ object Main {
     * in with `upsertMergedState`, and a streamed export of the merged
     * view. */
   final class HydroFeed(conf: Conf, spark: SparkSession) extends Workload {
+    // sized so that the cold, settling and timed passes fit one run
+    private val Sites = 15000
+    private val Batches = 4
     private val root = s"${conf.work}/hydro"
     private val nproc = spark.sparkContext.defaultParallelism
     private def fs = {
@@ -168,10 +167,11 @@ object Main {
     }
 
     /** (sites, seed) per batch: batch i delivers sites [0, n_i), n_i
-      * growing from 2/(b+1) to all of `sites`, each with its own seed. */
-    def batches(sites: Int, b: Int): Seq[(Int, Long)] =
-      (0 until b).map { i =>
-        (math.max(1, (sites.toLong * (i + 2) / (b + 1)).toInt),
+      * growing from 2/(Batches+1) to all of `Sites`, each with its own
+      * seed. */
+    def batches: Seq[(Int, Long)] =
+      (0 until Batches).map { i =>
+        (math.max(1, (Sites.toLong * (i + 2) / (Batches + 1)).toInt),
           new Random(conf.seed * 7919L + i).nextLong())
       }
 
@@ -188,20 +188,11 @@ object Main {
         .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
 
     def ops(spark: SparkSession, pass: Int, keep: Boolean): Seq[Op] =
-      batches(conf.hydroSites, conf.hydroBatches).zipWithIndex.map { case ((n, s), i) =>
+      batches.zipWithIndex.map { case ((n, s), i) =>
         Op(if (i == 0) "load" else "upsert", () => HydroPipeline.toFeatures(feed(n, s)),
           features => HydroPipeline.upsertMergedState(spark, state, features))
       } :+ Op("export", () => HydroPipeline.mergedFromState(spark, state),
         merged => HydroPipeline.writeFeatureCollectionStreamed(merged, exportDir))
-
-    private def bytesUnder(path: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
-    }
-
-    override def afterOp(op: Op): Map[String, Any] =
-      if (op.name == "export") Map.empty
-      else Map("state_bytes" -> bytesUnder(state))
 
     /** Order-independent digest: row count plus two sums of per-row
       * hashes (exact in DECIMAL). */
@@ -214,8 +205,7 @@ object Main {
     }
 
     def check(spark: SparkSession): Map[String, Any] = {
-      val delivered = batches(conf.hydroSites, conf.hydroBatches)
-        .map { case (n, s) => HydroPipeline.toFeatures(feed(n, s)) }
+      val delivered = batches.map { case (n, s) => HydroPipeline.toFeatures(feed(n, s)) }
         .reduce(_ unionByName _)
       // one row per distinct site that delivered a flow or gage series
       val oneShot = digest(HydroPipeline.mergeSites(delivered))
@@ -230,7 +220,7 @@ object Main {
 
     override def extraTrace(spark: SparkSession): Map[String, Any] = {
       // the synthetic feed alone, at the largest batch size
-      val (n, s) = batches(conf.hydroSites, conf.hydroBatches).last
+      val (n, s) = batches.last
       val t0 = nowMs()
       noop(feed(n, s))
       val secs = (nowMs() - t0) / 1e3
@@ -238,7 +228,7 @@ object Main {
     }
 
     def seriesRows: Long =
-      batches(conf.hydroSites, conf.hydroBatches).map(_._1.toLong * 2).sum
+      batches.map(_._1.toLong * 2).sum
   }
 
   def main(args: Array[String]): Unit = {
@@ -275,7 +265,6 @@ object Main {
 
     val rec = new Recorder(spark)
     val passes = mutable.ArrayBuffer.empty[Map[String, Any]]
-    val opExtras = mutable.ArrayBuffer.empty[Map[String, Any]]
     // role: "settle" (untraced, not measured), "timed" (untraced,
     // measured) or "traced"
     def runPasses(budgetS: Double, role: String, minPasses: Int): Unit = {
@@ -286,10 +275,7 @@ object Main {
         val p = passes.size
         workload.reset()
         val (c0, g0, t0) = (procCpuS(), gcS(), nowMs())
-        workload.ops(spark, p, keep = false).foreach { op =>
-          rec.run(p, op)
-          if (role == "traced") opExtras += (workload.afterOp(op) + ("id" -> rec.ops.last("id")))
-        }
+        workload.ops(spark, p, keep = false).foreach(op => rec.run(p, op))
         val t1 = nowMs()
         passes += Map("pass" -> p, "role" -> role, "start_ms" -> t0, "end_ms" -> t1,
           "cpu_s" -> (procCpuS() - c0), "gc_s" -> (gcS() - g0))
@@ -339,7 +325,6 @@ object Main {
           Map("phase" -> n, "start_ms" -> a, "end_ms" -> b) },
         "files_written" -> jobs.filesWritten.map { case (x, n) =>
           Map("execution" -> x.toString, "files" -> n) },
-        "op_extras" -> opExtras.toSeq,
         "extra" -> extra)
 
     val doc = Map(

@@ -13,7 +13,7 @@ import stats
 
 class TailPercentile(unittest.TestCase):
     def test_ten_samples_beyond(self):
-        vals = list(range(1, 47))  # 46 samples, as one analytics pass
+        vals = list(range(1, 47))
         pct, v = stats.tail_percentile(vals)
         self.assertEqual(pct, 78)
         self.assertEqual(sum(x > v for x in vals), 10)
