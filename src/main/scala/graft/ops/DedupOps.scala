@@ -936,33 +936,10 @@ object DedupOps {
   /** Duplicate clusters: connected components over the near-dup pair
     * graph, labeled by the minimum doc_id in each component — the step
     * that turns pairwise near-dup hits into keep/drop decisions (keep
-    * one doc per cluster).
-    *
-    * Algorithm: iterative min-label propagation. Each node starts as
-    * its own label; every round each node takes the min of its label
-    * and its neighbors' labels; stop when a round changes nothing.
-    * Rounds = graph diameter (near-dup components are tiny chains, so
-    * 2-4 rounds in practice). Each round is one join + one aggregation
-    * on the edge list — all distributed, nothing driver-side except
-    * the convergence counter. Lineage is cut with localCheckpoint so
-    * the loop cannot build an unbounded plan. At 100 TB the same loop
-    * holds (edges ≪ corpus after blocking); the classic
-    * [[connectedComponentsStar]] variant is the swap-in upgrade if
-    * components ever get deep. */
+    * one doc per cluster). The merge is [[connectedComponents]], whose
+    * scaladoc states the labeling and round contract. */
   def dedupClusters(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
     connectedComponents(
-      nearDupNgram(spark, dir, threshold).select(col("doc_a"), col("doc_b")))
-      .select(col("id").as("doc_id"), col("cluster"))
-
-  /** [[dedupClusters]] with [[connectedComponentsStar]] as the merge:
-    * identical output (both label by component min — the q97 oracle is
-    * q61's SQL verbatim), different depth budget. The pair graph is
-    * the same, so at 100 TB choosing between them is purely a
-    * component-shape question: min-label when near-dup components are
-    * the usual shallow chains, star when a boilerplate-heavy corpus
-    * produces deep ones. */
-  def dedupClustersStar(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
-    connectedComponentsStar(
       nearDupNgram(spark, dir, threshold).select(col("doc_a"), col("doc_b")))
       .select(col("id").as("doc_id"), col("cluster"))
 
@@ -1114,70 +1091,6 @@ object DedupOps {
     ranks.select(col("id").as("doc_id"), TextOps.roundAt(col("pr"), 6).as("pr"))
   }
 
-  /** Connected components over an undirected pair list (`doc_a`,
-    * `doc_b` long columns): returns (id, cluster) where cluster is the
-    * minimum member id of the component. Iterative min-label
-    * propagation with localCheckpoint lineage cuts.
-    *
-    * Convergence detection is FUSED into the round's materialization:
-    * the per-round plan carries both the old and new label, and a
-    * narrow count-changed map feeds a LongAccumulator while the eager
-    * localCheckpoint materializes the round — one job per round, no
-    * separate convergence action. The accumulator read is retry-safe
-    * for this use: task retries can only OVER-count changes (labels
-    * only decrease, so a genuinely stationary round adds 0 on every
-    * attempt), hence `changed == 0 ⇒ converged` holds under
-    * at-least-once accumulator semantics; a spurious positive merely
-    * runs one more (stationary) round.
-    *
-    * Rounds = component diameter (near-dup components are tiny chains,
-    * so 2–4 rounds in practice). If the cap is hit without
-    * convergence the method THROWS rather than returning a silently
-    * under-merged labeling — wrong clusters with no error is the
-    * failure mode an oracle on real data can never catch. Deep
-    * components at 100 TB are what [[connectedComponentsStar]] is for
-    * — same contract, O(log² n) rounds — not a reason to raise the
-    * cap. */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val spark = pairs.sparkSession
-    val p = pairs.localCheckpoint()
-    val edges = p.union(
-      p.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    var labels = edges.select(col("doc_a").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
-    var done = false
-    var rounds = 0
-    while (!done && rounds < maxRounds) {
-      val changed = spark.sparkContext.longAccumulator(s"ccChanged_r$rounds")
-      val nbMin = edges.join(labels, edges("doc_b") === labels("id"))
-        .groupBy(col("doc_a")).agg(min(col("label")).as("nb_label"))
-      val joined = labels.join(nbMin, labels("id") === nbMin("doc_a"), "left")
-        .select(labels("id").as("_1"),
-          col("label").as("_2"),
-          least(col("label"), coalesce(col("nb_label"), col("label"))).as("_3"))
-      // narrow map: count label changes into the accumulator during the
-      // SAME job that materializes the round (localCheckpoint is eager)
-      import spark.implicits._
-      labels = joined.as[(Long, Long, Long)]
-        .mapPartitions { it =>
-          it.map { case (id, old, nw) =>
-            if (nw < old) changed.add(1L)
-            (id, nw)
-          }
-        }
-        .toDF("id", "label")
-        .localCheckpoint()
-      done = changed.value == 0L
-      rounds += 1
-    }
-    if (!done) throw new IllegalStateException(
-      s"connectedComponents did not converge within $maxRounds rounds " +
-        "(component diameter exceeds the cap); raise maxRounds or switch " +
-        "to connectedComponentsStar, which converges in O(log^2 n) rounds " +
-        "on deep graphs")
-    labels.select(col("id"), col("label").as("cluster"))
-  }
-
   /** Connected components of a pair graph whose edges are CONTAINED
     * within a grouping key (`grp`, `doc_a`, `doc_b`): when the pair
     * generator proves no edge crosses groups — SemDeDup's
@@ -1188,15 +1101,15 @@ object DedupOps {
     * contract as [[connectedComponents]] on such graphs.
     *
     * This is the one imperative-kernel operator in the dedup family,
-    * and deliberately so: [[connectedComponents]] runs O(diameter)
-    * Spark jobs — at bench scale that is ~0.5 s of scheduler latency
-    * per round on a 700-edge graph (the q97-under-contention
-    * amplification, VERDICT r15), and at 100 TB it is O(diameter)
-    * full-edge shuffles. With containment, one edge-sized shuffle
-    * replaces them all. Memory per group is O(nodes in the group) —
-    * the parent map; edges stream through the iterator — which is the
-    * SAME bound the keeper window downstream already imposes, and the
-    * corpus-proportional-k contract (SemDedupScaleSpec) pins group
+    * and deliberately so: [[connectedComponents]] runs one Spark job
+    * per round, O(log² n) rounds, each with several edge-sized
+    * shuffles, and at bench scale every job is scheduler latency paid
+    * on a graph one task could label. With containment, one
+    * edge-sized shuffle replaces them all. Memory per group is
+    * O(nodes in the group) — the parent map; edges stream through the
+    * iterator — which is the SAME bound the keeper window downstream
+    * already imposes, and the corpus-proportional-k contract
+    * (SemDedupScaleSpec) pins group
     * sizes ≈ targetClusterSize as the corpus grows. Union by MIN root
     * (larger root attaches under smaller) with path compression, so
     * every root is its component's minimum id by construction. */
@@ -1237,7 +1150,7 @@ object DedupOps {
     * per batch against a standing index; this updates the CLUSTERS
     * per batch against the standing labeling). The state re-enters
     * the graph as star edges (id → cluster), the batch's pairs join
-    * them, and one [[connectedComponentsStar]] pass converges over a
+    * them, and one [[connectedComponents]] pass converges over a
     * graph of |state| + |batch| edges — history's original pair
     * graph is never touched again, which is the whole point at
     * 100 TB: the one-shot clustering runs once, every later ingest
@@ -1254,7 +1167,7 @@ object DedupOps {
     * canonicalization drops the self-loop edge but keeps the node,
     * so an isolated doc stays labeled. */
   def incrementalComponents(state: DataFrame, newPairs: DataFrame): DataFrame =
-    connectedComponentsStar(
+    connectedComponents(
       state.select(col("id").as("doc_a"), col("cluster").as("doc_b"))
         .unionByName(newPairs.select(col("doc_a"), col("doc_b"))))
 
@@ -1268,20 +1181,32 @@ object DedupOps {
     val pairs = nearDupNgram(spark, dir, threshold)
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
     val slice = pmod(col("doc_a") + col("doc_b"), lit(3))
-    val s0 = connectedComponentsStar(pairs.filter(slice === 0))
+    val s0 = connectedComponents(pairs.filter(slice === 0))
     val s1 = incrementalComponents(s0, pairs.filter(slice === 1))
     incrementalComponents(s1, pairs.filter(slice === 2))
       .select(col("id").as("doc_id"), col("cluster"))
   }
 
-  /** Large-star/small-star connected components — the deep-graph
-    * variant [[connectedComponents]]' cap error points at. Same
-    * contract: (id, cluster = minimum member id of the component) for
-    * every node in `pairs`; different round complexity — O(log² n)
-    * alternating-star rounds (Kiveris et al. 2014, "Connected
-    * Components in MapReduce and Beyond") instead of O(diameter)
-    * min-label rounds, so a 10⁶-node chain that min-label could never
-    * finish converges in a few dozen rounds.
+  /** Ways the min-attach join is salted when [[connectedComponents]]
+    * takes its salted round body. */
+  private val CcSaltFactor = 8
+
+  /** Connected components over an undirected pair list (`doc_a`,
+    * `doc_b` long columns). The contract:
+    *  - returns (id, cluster) for every node in `pairs`, where cluster
+    *    is the MINIMUM member id of the node's component. Orientation,
+    *    duplicate edges and self-loops do not matter; a node with only
+    *    a self-loop is its own component;
+    *  - converges in O(log² n) rounds, whatever the component diameter
+    *    (large-star/small-star, Kiveris et al. 2014, "Connected
+    *    Components in MapReduce and Beyond");
+    *  - an input that is already a star forest centered at component
+    *    minima runs zero rounds;
+    *  - hitting `maxRounds` without convergence THROWS rather than
+    *    returning an under-merged labeling — wrong clusters with no
+    *    error is the failure mode an oracle on real data never catches;
+    *  - takes the salted round body when the input's max degree is
+    *    ≥ `saltThreshold` (0 forces it), the plain body otherwise.
     *
     * Each round rewrites the canonical hi→lo edge list (u > v) twice:
     *  - large-star: per node u over the SYMMETRIC neighborhood, hook
@@ -1292,83 +1217,35 @@ object DedupOps {
     *    all of them plus u itself at m = min(N⁻(u)).
     * Each star op is a per-node min AGGREGATION (hash aggregate with
     * map-side partial combine — a degree-d node contributes at most
-    * one partial row per map partition to the shuffle, so no task
-    * ever holds a whole neighborhood) followed by a min-attach join —
-    * SALTED ([[Skew.saltedJoin]]) when the input's max degree reaches
-    * `saltThreshold`, plain otherwise (see the body comment for the
-    * trade) — attaching each node's min back to its edge rows; the
-    * salt spreads a web-scale hub's edge rows over `skewFactor`
-    * reducers instead of one. A windowed min was the
-    * round body through round 11 and was REPLACED for exactly that
-    * skew: window exec keeps every row of a partition key in one
-    * task, so one giant-component center became one hot task the
-    * moment a component outgrew executor memory. At bench scale the
-    * planner broadcasts the (node, min) side and the join costs no
-    * shuffle at all; the per-round distinct keeps the edge multiset
-    * at most |E|.
+    * one partial row per map partition, so no task ever holds a whole
+    * neighborhood) followed by a min-attach join back onto the edge
+    * rows; the salted body ([[Skew.saltedJoin]]) spreads a hub's edge
+    * rows over `CcSaltFactor` reducers instead of one. At bench scale
+    * the planner broadcasts the (node, min) side and the join costs no
+    * shuffle. The per-round distinct keeps the edge multiset at most
+    * |E|, and localCheckpoint cuts lineage so the loop cannot build an
+    * unbounded plan.
     *
-    * Convergence = the edge set IS a star forest, tested EXACTLY and
-    * one round earlier than stationarity can see it. Under canonical
-    * u > v edges a star forest centered at component minima is
-    * precisely the edge sets where (a) the u-side and v-side node
-    * sets are DISJOINT (a u-side node is a member, a v-side node is
-    * a center; a node on both sides is a chain link) and (b) every
-    * u-side node has degree 1 (a member pointing at two centers —
-    * {(5,1),(5,2)} — is side-disjoint yet still merges them), and
-    * the alternation's fixed points are exactly those star forests —
-    * so the two-part shape test is an exact fixpoint test, not a
-    * probabilistic one. Through round 19 convergence was a (count, xor-of-xxhash64)
-    * stationarity fingerprint; it was replaced because stationarity
-    * is only observable one round LATE — run a no-op round, notice
-    * nothing changed — while star-forest-ness is a property of the
-    * CURRENT edge set. Each invocation stops one round-job earlier,
-    * and an input that is ALREADY a star forest (q143's later folds
-    * when a slice's edges land inside settled components) runs ZERO
-    * rounds: the setup probe carries the same test. The probe rides
-    * the round's single materializing action (the checkpoint stays
-    * LAZY; the probe aggregation materializes it — ONE Spark job per
-    * round): explode each edge into its two (node, side) rows,
-    * per-node min/max of side, count both-sided nodes — one extra
-    * edge-sized shuffle versus the old flat fingerprint agg, bought
-    * back several times over by the saved no-op round, because the
-    * iterative shape is uniquely sensitive to per-job scheduler
-    * latency (r15's driver artifact read q97 at 27.4 s under box
-    * contention vs 2.9 s solo — job fan-out amplifies whatever
-    * latency the box adds). Like
-    * min-label, hitting the cap THROWS rather than returning an
-    * under-merged labeling, and localCheckpoint cuts lineage so the
-    * loop cannot build an unbounded plan.
-    *
-    * Scale: each round shuffles edge-sized rows only (two partial-agg
-    * minima + two salted min-attach joins + one distinct); labels
-    * never materialize until the final star edges ARE the labels, and
-    * the aggregate/salt structure bounds every task's memory by
-    * |edges| / (partitions × skewFactor) regardless of how skewed the
-    * degree distribution is (the Kiveris et al. §4 high-degree
-    * concern, answered with salting rather than their sampling —
-    * salting needs no second pass and keeps the rounds' semantics
-    * exactly the paper's). At bench scale the agg+join body costs
-    * ~2× the windowed body it replaced (two broadcast-build jobs per
-    * round on a graph whose components fit one task anyway) — the
-    * deliberate trade: constant-factor overhead where skew cannot
-    * hurt, bounded tasks where it can. */
-  def connectedComponentsStar(pairs: DataFrame, maxRounds: Int = 50,
-                              skewFactor: Int = 8,
-                              saltThreshold: Int = 1024): DataFrame = {
-    // checkpoint the INPUT once: nodes and edges both derive from it,
-    // and without this the caller's pair plan (a whole near-dup
-    // candidate+verify run for dedupClustersStar) evaluates twice —
-    // measured ~1.1 s of q97's round-12 cost at sf0.1. LAZY since
-    // round 17: the setup-probe job below is the first action through
-    // it, so it materializes there instead of in a standalone job —
-    // one fewer job per CC invocation, ×3 for q143's fold chain,
-    // whose median/min gap is pure per-job scheduler-latency
-    // amplification (VERDICT r16 item 4).
+    * Convergence is tested EXACTLY on the current edge set: the
+    * alternation's fixed points are the star forests centered at
+    * component minima, which under canonical u > v edges are precisely
+    * the edge sets where (a) no node sits on both the u side and the
+    * v side (such a node is a chain link) and (b) every u-side node
+    * has degree 1 (a member pointing at two centers — {(5,1),(5,2)} —
+    * is side-disjoint yet still merges them). One aggregation checks
+    * both and is the round's only action: it materializes the round's
+    * lazy checkpoint. The same check on the input also yields the max
+    * degree that picks the round body. */
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 50,
+                          saltThreshold: Int = 1024): DataFrame = {
+    // checkpoint the INPUT once, lazily: nodes and edges both derive
+    // from it, so the caller's pair plan (a whole near-dup
+    // candidate+verify run for dedupClusters) evaluates once, inside
+    // the setup probe below
     val p = pairs.localCheckpoint(false)
     // nodes/edges both derive from the checkpointed input, so their own
-    // checkpoints are LAZY: edges materializes inside the setup-probe
-    // job below, nodes inside the final labeling join — two fewer
-    // standalone jobs with identical cached-block behavior.
+    // checkpoints are LAZY too: edges materializes inside the
+    // setup probe, nodes inside the final labeling join
     val nodes = p.select(col("doc_a").as("id"))
       .union(p.select(col("doc_b").as("id"))).distinct()
       .localCheckpoint(false)
@@ -1377,35 +1254,23 @@ object DedupOps {
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
       .distinct().localCheckpoint(false)
-    // Salting is paid ONLY when the input actually carries a hub: one
-    // cheap degree pass over the canonical edges (explode both
-    // endpoints, count, max — edge-sized shuffle, runs once) decides
-    // the round body for the whole run. Skew-free graphs — the common
-    // case for near-dup components — take plain min-attach joins and
-    // skip the salt's per-round replicate+explode overhead (~+50% at
-    // bench scale, measured round 12→13 on q97). Residual: stars
-    // concentrate degree at component minima as rounds progress, so a
-    // low-degree input with a giant component still grows a hub
-    // mid-run; the unsalted body stays MEMORY-safe there (hash/SMJ
-    // joins stream a hot key's probe rows; only the windowed body the
-    // salted form replaced had to hold a neighborhood in one task) at
-    // the price of late-round time imbalance bounded by the largest
-    // component. Deployments expecting giant components set
+    // Salting is paid ONLY when the input actually carries a hub: the
+    // setup probe's max degree decides the round body for the whole
+    // run. Skew-free graphs — the common case for near-dup components
+    // — take plain min-attach joins and skip the salt's per-round
+    // replicate+explode overhead. Residual: stars concentrate degree at
+    // component minima as rounds progress, so a low-degree input with
+    // a giant component still grows a hub mid-run; the plain body
+    // stays MEMORY-safe there (hash/SMJ joins stream a hot key's probe
+    // rows) at the price of late-round time imbalance bounded by the
+    // largest component. Deployments expecting giant components set
     // saltThreshold=0 to force salting unconditionally.
-    // ONE setup action folds the former jobs together: it
-    // materializes the lazy edge checkpoint, computes the max degree
-    // (posexplode both endpoints, per-node count), and runs the exact
-    // star-forest convergence test on the INPUT — per node, pos spans
-    // {0} (u-side only), {1} (v-side only), or both; any node with
-    // min(pos)=0 AND max(pos)=1 sits on both sides, so the edge set
-    // is not yet a disjoint-star forest (see scaladoc). An input that
-    // is already a star forest runs zero rounds.
-    // A node VIOLATES star-forest shape iff it sits on both sides
-    // (chain link: member that is also a center) OR it is a u-side
-    // node of degree > 1 (member pointing at two centers — the edge
-    // set is side-disjoint yet those centers still merge through it,
-    // e.g. {(5,1),(5,2)}). Zero violations ⟺ disjoint canonical
-    // stars ⟺ fixpoint (see scaladoc).
+    //
+    // The probe: posexplode each edge into its (node, side) rows; per
+    // node, count and min/max of side. A node VIOLATES star-forest
+    // shape iff it sits on both sides (min 0, max 1) OR it is a
+    // u-side node of degree > 1. Zero violations ⟺ fixpoint (see
+    // scaladoc).
     def starProbeAgg(e: DataFrame): DataFrame = e
       .select(col("u"), col("v"),
         posexplode(array(col("u"), col("v"))).as(Seq("pos", "n")))
@@ -1420,7 +1285,7 @@ object DedupOps {
     val maxDeg = probeRow.getLong(0)
     val useSalt = maxDeg >= saltThreshold
     def minAttach(l: DataFrame, mins: DataFrame): DataFrame =
-      if (useSalt) Skew.saltedJoin(l, mins, col("u"), col("nu"), skewFactor)
+      if (useSalt) Skew.saltedJoin(l, mins, col("u"), col("nu"), CcSaltFactor)
       else l.join(mins, col("u") === col("nu"))
     def isStarForest(e: DataFrame): Boolean =
       starProbeAgg(e).head().getLong(1) == 0L
@@ -1444,19 +1309,23 @@ object DedupOps {
         .union(minsS.select(col("nu").as("u"), col("mn").as("v")))
         .distinct()
         .localCheckpoint(false) // lazy: isStarForest() below is the
-                                // action that materializes it — one
-                                // job per round (see scaladoc)
+                                // action that materializes it (see
+                                // scaladoc)
       converged = isStarForest(small)
       edges = small
       rounds += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge within $maxRounds rounds; " +
+      s"connectedComponents did not converge within $maxRounds rounds; " +
         "this exceeds the O(log^2 n) bound for any realistic graph — " +
         "inspect the edge list for pathological structure before raising " +
         "the cap")
+    // the labeling leaves as a checkpointed table, like every round's
+    // edges: callers join a label scan onto their corpus instead of
+    // re-planning this final join inside each of their plans
     nodes.join(edges, nodes("id") === edges("u"), "left")
       .select(nodes("id"), coalesce(edges("v"), nodes("id")).as("cluster"))
+      .localCheckpoint(false)
   }
 
   // ---------------------------------------------------------------

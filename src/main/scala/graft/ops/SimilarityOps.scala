@@ -1009,7 +1009,9 @@ object SimilarityOps {
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val msim = scala.collection.mutable.Map.empty[Long, Double]
     var picks = Vector.empty[(Long, Long, Double, Double)] // rank, id, rel, mmr
-    for (r <- 1 to k) {
+    // k picks at most the candidates there are: a query id with no
+    // embedding, or k > candK, stops the greedy when the list runs out
+    for (r <- 1 to math.min(k, candLocal.length)) {
       val chosen =
         if (r == 1) {
           val (id, rel) = candLocal.head // already (rel desc, vec_id asc)

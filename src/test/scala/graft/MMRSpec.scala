@@ -79,4 +79,19 @@ class MMRSpec extends AnyFunSuite {
     assert(got.map(_._2).distinct.size == k)
     assert(got.map(_._1) == (1L to k.toLong))
   }
+
+  test("k beyond the candidate list picks every candidate once, then stops") {
+    val over = SimilarityOps.mmrRerank(spark, sf, k = 10, candK = 5)
+      .as[(Long, Long, Double, Double)].collect().toSeq
+    val exact = SimilarityOps.mmrRerank(spark, sf, k = 5, candK = 5)
+      .as[(Long, Long, Double, Double)].collect().toSeq
+    assert(exact.size == 5)
+    assert(over == exact)
+  }
+
+  test("a query id with no embedding returns zero rows, typed like the default call") {
+    val none = SimilarityOps.mmrRerank(spark, sf, queryId = -1L)
+    assert(none.schema == SimilarityOps.mmrRerank(spark, sf).schema)
+    assert(none.count() == 0L)
+  }
 }

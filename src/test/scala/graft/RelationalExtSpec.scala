@@ -145,13 +145,20 @@ class RelationalExtSpec extends AnyFunSuite {
         .map(x => x -> find(x)).toMap
       // min member of each component equals the root found by min-union
       val minOfComp = expected.groupBy(_._2).map { case (r, m) => r -> m.keys.min }
-      val got = DedupOps.connectedComponents(edges.toDF("doc_a", "doc_b"))
+      val df = edges.toDF("doc_a", "doc_b")
+      val got = DedupOps.connectedComponents(df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got.keySet == expected.keySet, s"trial $trial node set")
       expected.foreach { case (node, root) =>
         assert(got(node) == minOfComp(root),
           s"trial $trial: node $node got ${got(node)} expected ${minOfComp(root)}")
       }
+      // saltThreshold=0 forces the salted round body on the same graph
+      // (these small random graphs take the plain body by default):
+      // both bodies must compute the identical labeling
+      val salted = DedupOps.connectedComponents(df, saltThreshold = 0)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(salted == got, s"trial $trial: salted and plain round bodies diverge")
     }
   }
 
@@ -159,9 +166,8 @@ class RelationalExtSpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     // boundedComponents' contract: edges are CONTAINED within grp, so
-    // per-group union-find must equal the global min-label loop run on
-    // the same (group-disjoint) edge set — including deep chains that
-    // would cost the loop one job per hop.
+    // per-group union-find must equal the global operator run on the
+    // same (group-disjoint) edge set — including a deep chain.
     val rnd = new scala.util.Random(13)
     (1 to 5).foreach { trial =>
       val edges = (0 until 4).flatMap { g =>
@@ -172,7 +178,7 @@ class RelationalExtSpec extends AnyFunSuite {
           .map { case (a, b) => (g.toLong, math.min(a, b), math.max(a, b)) }
           .distinct
       } ++
-        // one deep chain group: diameter 15, the loop's worst shape
+        // one deep chain group: diameter 15
         (0L until 15L).map(i => (9L, 9000L + i, 9001L + i))
       val df = edges.toDF("grp", "doc_a", "doc_b")
       val global = DedupOps.connectedComponents(
@@ -187,39 +193,20 @@ class RelationalExtSpec extends AnyFunSuite {
   test("connected components fail loudly when the round cap is hit") {
     val spark2 = spark
     import spark2.implicits._
-    // a path graph 0-1-2-...-12 needs 12 propagation rounds for label 0
-    // to reach the far end; a cap of 4 must throw, not return a
-    // silently under-merged labeling
-    val path = (0L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    // a 200-node path (diameter 200): a cap too small to converge must
+    // throw, not return a silently under-merged labeling
+    val path = (0L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val e = intercept[IllegalStateException] {
-      DedupOps.connectedComponents(path, maxRounds = 4).collect()
+      DedupOps.connectedComponents(path, maxRounds = 2).collect()
     }
     assert(e.getMessage.contains("did not converge"))
-    // the same graph converges with room to run (12 rounds + 1 to
-    // detect stationarity) and collapses to a single component
-    val ok = DedupOps.connectedComponents(path, maxRounds = 14)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ok.values.toSet == Set(0L), s"expected one component: $ok")
-    assert(ok.keySet == (0L to 12L).toSet)
-  }
-
-  test("star components collapse a 200-node path that blows the min-label cap") {
-    val spark2 = spark
-    import spark2.implicits._
-    // diameter 200: min-label needs ~200 rounds so its default cap of
-    // 50 correctly throws — this is exactly the deep-graph case the
-    // star variant exists for
-    val path = (0L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    intercept[IllegalStateException] {
-      DedupOps.connectedComponents(path).collect()
-    }
     // large-star/small-star converges in O(log^2 n) rounds: a tight
     // cap of 12 is ample for n=201 and would catch any regression to
     // diameter-bound behavior
-    val got = DedupOps.connectedComponentsStar(path, maxRounds = 12)
+    val ok = DedupOps.connectedComponents(path, maxRounds = 12)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.keySet == (0L to 200L).toSet)
-    assert(got.values.toSet == Set(0L), "one component labeled by its min")
+    assert(ok.keySet == (0L to 200L).toSet)
+    assert(ok.values.toSet == Set(0L), "one component labeled by its min")
   }
 
   test("star components: a 10^4-degree hub labels correctly through the salted round body") {
@@ -234,11 +221,11 @@ class RelationalExtSpec extends AnyFunSuite {
     // the large-star and small-star sides see the high-degree center).
     val n = 10000
     val hubMin = (1 to n).map(i => (0L, i.toLong)).toDF("doc_a", "doc_b")
-    val got = DedupOps.connectedComponentsStar(hubMin, maxRounds = 12)
+    val got = DedupOps.connectedComponents(hubMin, maxRounds = 12)
     assert(got.count() == n + 1)
     assert(got.filter($"cluster" =!= 0L).count() == 0, "hub-as-min star mislabeled")
     val hubTop = (1 to n).map(i => (20000L, i.toLong)).toDF("doc_a", "doc_b")
-    val got2 = DedupOps.connectedComponentsStar(hubTop, maxRounds = 12)
+    val got2 = DedupOps.connectedComponents(hubTop, maxRounds = 12)
     assert(got2.count() == n + 1)
     assert(got2.filter($"cluster" =!= 1L).count() == 0, "hub-as-max star mislabeled")
   }
@@ -253,47 +240,21 @@ class RelationalExtSpec extends AnyFunSuite {
     // convergence at the probe. Both a pure instance and one embedded
     // beside settled stars (the q143 fold shape).
     val fork = Seq((5L, 1L), (5L, 2L)).toDF("doc_a", "doc_b")
-    val got = DedupOps.connectedComponentsStar(fork, maxRounds = 12)
+    val got = DedupOps.connectedComponents(fork, maxRounds = 12)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 5L -> 1L), s"fork mislabeled: $got")
     val mixed = Seq((5L, 1L), (5L, 2L), (30L, 10L), (31L, 10L))
       .toDF("doc_a", "doc_b")
-    val got2 = DedupOps.connectedComponentsStar(mixed, maxRounds = 12)
+    val got2 = DedupOps.connectedComponents(mixed, maxRounds = 12)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got2 == Map(1L -> 1L, 2L -> 1L, 5L -> 1L,
       10L -> 10L, 30L -> 10L, 31L -> 10L), s"mixed mislabeled: $got2")
     // an input that already IS a star forest converges at the setup
     // probe (zero rounds) with identical labels
     val settled = Seq((3L, 1L), (2L, 1L), (9L, 7L)).toDF("doc_a", "doc_b")
-    val got3 = DedupOps.connectedComponentsStar(settled, maxRounds = 12)
+    val got3 = DedupOps.connectedComponents(settled, maxRounds = 12)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got3 == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
-  }
-
-  test("property: star components agree with min-label and union-find on random graphs") {
-    val spark2 = spark
-    import spark2.implicits._
-    val rnd = new scala.util.Random(11)
-    (1 to 5).foreach { trial =>
-      val n = 20 + rnd.nextInt(30)
-      val edges = Seq.fill(n)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-        .filter { case (a, b) => a != b }
-        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-        .distinct
-      val df = edges.toDF("doc_a", "doc_b")
-      val minLabel = DedupOps.connectedComponents(df)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val star = DedupOps.connectedComponentsStar(df)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == minLabel, s"trial $trial: star and min-label labelings diverge")
-      // saltThreshold=0 forces the salted round body on the same graph
-      // (these small random graphs take the plain body by default):
-      // both bodies must compute the identical labeling
-      val starSalted = DedupOps.connectedComponentsStar(df, saltThreshold = 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(starSalted == minLabel,
-        s"trial $trial: salted and plain round bodies diverge")
-    }
   }
 
   test("property: incremental component folds equal the one-shot clustering for any chopping") {
@@ -307,7 +268,7 @@ class RelationalExtSpec extends AnyFunSuite {
         .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
         .distinct
       val df = edges.toDF("doc_a", "doc_b")
-      val oneShot = DedupOps.connectedComponentsStar(df)
+      val oneShot = DedupOps.connectedComponents(df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // two different choppings AND two different fold orders — the
       // state must absorb batches whatever the boundaries are
@@ -315,7 +276,7 @@ class RelationalExtSpec extends AnyFunSuite {
         val batches = edges.zipWithIndex.groupBy(_._2 % k).toSeq.sortBy(_._1)
           .map(_._2.map(_._1))
         def fold(bs: Seq[Seq[(Long, Long)]]): Map[Long, Long] = {
-          var state = DedupOps.connectedComponentsStar(
+          var state = DedupOps.connectedComponents(
             bs.head.toDF("doc_a", "doc_b"))
           bs.tail.foreach { b =>
             state = DedupOps.incrementalComponents(state, b.toDF("doc_a", "doc_b"))
@@ -339,7 +300,7 @@ class RelationalExtSpec extends AnyFunSuite {
     val messy = Seq((2L, 1L), (1L, 2L), (3L, 2L), (2L, 3L), (2L, 3L),
       (10L, 11L), (7L, 7L), (1L, 1L)).toDF("doc_a", "doc_b")
     def run(df: org.apache.spark.sql.DataFrame) =
-      DedupOps.connectedComponentsStar(df).collect()
+      DedupOps.connectedComponents(df).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val got = run(messy)
     // self-loop-only node 7 is isolated: labeled by itself

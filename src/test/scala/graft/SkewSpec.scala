@@ -52,7 +52,7 @@ class SkewSpec extends AnyFunSuite {
     //  - The salt wins when the operator is outside AQE's reach: a
     //    shuffle-hash/broadcast-ineligible join shape it declines, an
     //    iterative loop where the same hot key re-concentrates every
-    //    round (connectedComponentsStar's min-attach — the q97 case),
+    //    round (connectedComponents' min-attach — the q61 case),
     //    or streaming state. It costs factor× replication of the
     //    other side unconditionally, which is why it's opt-in
     //    (saltThreshold) rather than always-on.

@@ -660,7 +660,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       } finally q.stop()
       state.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
-    val oneShot = DedupOps.connectedComponentsStar(pairs)
+    val oneShot = DedupOps.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val a = runChopped(Seq(rows.length / 3, rows.length / 3))
     val b = runChopped(Seq(rows.length / 7))
