@@ -209,6 +209,19 @@ class RelationalExtSpec extends AnyFunSuite {
     assert(ok.values.toSet == Set(0L), "one component labeled by its min")
   }
 
+  test("star components collapse a 200-node path that blows the min-label cap") {
+    val spark2 = spark
+    import spark2.implicits._
+    // diameter 200: a min-label loop moves a label one hop per round, so
+    // it needs ~200 rounds and blows the default cap of 50. The operator
+    // must collapse the path under that same default cap.
+    val path = (0L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val got = DedupOps.connectedComponents(path)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.keySet == (0L to 200L).toSet)
+    assert(got.values.toSet == Set(0L), "one component labeled by its min")
+  }
+
   test("star components: a 10^4-degree hub labels correctly through the salted round body") {
     val spark2 = spark
     import spark2.implicits._
@@ -255,6 +268,53 @@ class RelationalExtSpec extends AnyFunSuite {
     val got3 = DedupOps.connectedComponents(settled, maxRounds = 12)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got3 == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
+  }
+
+  test("property: star components agree with min-label and union-find on random graphs") {
+    val spark2 = spark
+    import spark2.implicits._
+    val rnd = new scala.util.Random(11)
+    (1 to 5).foreach { trial =>
+      val n = 20 + rnd.nextInt(30)
+      val edges = Seq.fill(n)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+        .filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+        .distinct
+      // reference 1: driver-side min-label propagation to its fixpoint
+      var minLabel = edges.flatMap { case (a, b) => Seq(a, b) }.map(x => x -> x).toMap
+      var changed = true
+      while (changed) {
+        val next = edges.foldLeft(minLabel) { case (m, (a, b)) =>
+          val l = math.min(m(a), m(b))
+          m.updated(a, l).updated(b, l)
+        }
+        changed = next != minLabel
+        minLabel = next
+      }
+      // reference 2: driver-side union-find, each root mapped to its
+      // component's minimum
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(ra) = rb
+      }
+      val byRoot = minLabel.keys.groupBy(find).map { case (r, m) => r -> m.min }
+      val unionFind = minLabel.keys.map(x => x -> byRoot(find(x))).toMap
+      assert(minLabel == unionFind, s"trial $trial: the two references disagree")
+      val df = edges.toDF("doc_a", "doc_b")
+      val star = DedupOps.connectedComponents(df)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(star == minLabel, s"trial $trial: star and min-label labelings diverge")
+      // saltThreshold=0 forces the salted round body on the same graph
+      val starSalted = DedupOps.connectedComponents(df, saltThreshold = 0)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(starSalted == unionFind,
+        s"trial $trial: salted round body and union-find diverge")
+    }
   }
 
   test("property: incremental component folds equal the one-shot clustering for any chopping") {
